@@ -68,7 +68,7 @@ object StreamProf {
             .agg(count(lit(1)).as("n"))
         else stream.toDS().toDF().filter(col("value") > 1e18) // empty project
       val q = t("start query") {
-        try df.writeStream.outputMode(if (stateful) OutputMode.Append() else OutputMode.Append())
+        try df.writeStream.outputMode(OutputMode.Append())
           .option("checkpointLocation", ckpt.getAbsolutePath)
           .format("memory").queryName(s"prof_$tag").start()
         finally {

@@ -2,6 +2,7 @@ package graft.metrics
 
 import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.graft.LocalRows
 import org.apache.spark.sql.functions.{col, collect_list, element_at, expr, lit, max, max_by, min, row_number, sort_array, struct, to_timestamp}
 
 /** A8 + P14: the engine's HTTP face — Prometheus text-format exposition
@@ -42,7 +43,14 @@ import org.apache.spark.sql.functions.{col, collect_list, element_at, expr, lit,
   * the plan fetches `limit(max + 1)` and an over-limit result returns a
   * 422 `too_many_results` error instead of materializing every series in
   * driver memory (the only unbounded driver collect the round-7 audit
-  * found in the tree).
+  * found in the tree). The ingest receivers decode each write on the
+  * driver under the same cap: a write of more than `maxResultRows`
+  * samples is refused and ingests nothing. The cap bounds ONE write, not
+  * what the server keeps: there is no retention limit. Every accepted
+  * sample stays on the driver as one compact Catalyst row until
+  * `close()` (clean_tombstones folds the rows into the stored plan,
+  * which still holds them), so driver heap grows with the samples
+  * ingested over the server's life.
   *
   * JDK built-in `HttpServer`, zero dependencies, one daemon executor;
   * `port = 0` binds an ephemeral port (read it back via [[boundPort]]).
@@ -184,18 +192,20 @@ final class MetricsServer(observed: Observed, port: Int = 0,
   // them permanently into the bound plan and clears the list. Plan-level
   // masking is the serving-face analogue of the physical rewrite
   // (Tombstones.clean), which q199 proves equivalent on the block store.
-  @volatile private var tombstonesList: Seq[Tombstones.Tombstone] = Nil
-  @volatile private var cleanedDf: Option[org.apache.spark.sql.DataFrame] = None
-  @volatile private var ingestedDf: Option[org.apache.spark.sql.DataFrame] = None
+  // All of it lives in ONE immutable value, replaced under the server's
+  // lock and read once per request by `src`, so a read never pairs the
+  // plan clean_tombstones just folded with the ingest it folded in.
+  @volatile private var state = MetricsServer.ServingState()
 
   promSource.foreach { boundSrc =>
     def src: PromQlParser.PromSource = {
-      val stored = cleanedDf.getOrElse(boundSrc.df)
-      val withIngest = ingestedDf.map(stored.unionByName(_)).getOrElse(stored)
+      val st = state
+      val stored = st.cleaned.getOrElse(boundSrc.df)
+      val withIngest = st.ingested.map(stored.unionByName(_)).getOrElse(stored)
       val base = boundSrc.copy(df = withIngest)
-      if (tombstonesList.isEmpty) base
+      if (st.tombstones.isEmpty) base
       else base.copy(df =
-        Tombstones.mask(base.df, tombstonesList, boundSrc.tsCol))
+        Tombstones.mask(base.df, st.tombstones, boundSrc.tsCol))
     }
     // Shape parsed wire samples (metric/ts/value + a label map) onto the
     // bound source's schema — the same projection RecordingRules uses.
@@ -212,16 +222,36 @@ final class MetricsServer(observed: Observed, port: Int = 0,
         case c => element_at(col(labelsCol), c).cast(typed(c)).as(c)
       }: _*)
     }
-    def appendIngest(shaped: org.apache.spark.sql.DataFrame): Unit =
-      synchronized {
-        ingestedDf = Some(ingestedDf.map(_.unionByName(shaped)).getOrElse(shaped))
+    // Decode ONCE, during the write request: collect the shaped rows
+    // (capped like every collect here — an over-cap write is refused and
+    // ingests nothing), convert only them to Catalyst rows, and rebuild
+    // the single ingested leaf over the rows kept so far (shared, not
+    // copied). A body that fails to decode fails here with 400 and leaves
+    // the state untouched, and each read's source stays two leaves,
+    // stored ∪ ingested, however many writes came before.
+    val ingestSchema = org.apache.spark.sql.types.StructType(
+      boundSrc.df.schema.map(_.copy(nullable = true)))
+    def appendIngest(shaped: org.apache.spark.sql.DataFrame): Unit = {
+      val rows = shaped.limit(maxResultRows + 1).collect()
+      if (rows.length > maxResultRows) throw new IllegalArgumentException(
+        s"write decodes to more than $maxResultRows samples; split it")
+      if (rows.nonEmpty) {
+        val fresh = LocalRows.toInternal(ingestSchema, rows.toSeq)
+        synchronized {
+          val kept = state.ingestedRows ++ fresh
+          state = state.copy(ingestedRows = kept, ingested = Some(
+            LocalRows.frame(boundSrc.df.sparkSession, ingestSchema, kept)))
+        }
       }
+    }
     // Remote-write RECEIVER (POST /api/v1/write): the REAL wire — a
     // stock Prometheus POSTs `Content-Encoding: snappy` over protobuf
     // (v1 `prometheus.WriteRequest`, or v2 `io.prometheus.write.v2
     // .Request` selected by the Content-Type proto= parameter) — plus
-    // the JSON mapping for hand-written bodies. All three wires land in
-    // the same shapeIngest → immediately queryable union.
+    // the JSON mapping for hand-written bodies (FAILFAST: a document
+    // that does not parse is rejected, not ingested as zero samples).
+    // All three wires land in the same shapeIngest and are decoded by
+    // appendIngest before the write is acknowledged.
     server.createContext("/api/v1/write", MetricsServer.rawBodyHandler {
       (enc, ctype, raw) =>
         import boundSrc.df.sparkSession.implicits._
@@ -393,16 +423,18 @@ final class MetricsServer(observed: Observed, port: Int = 0,
         val maxt = params.get("end").map(t =>
           MetricsServer.epochSec(MetricsServer.parseTime(t)) * 1000L)
           .getOrElse(Long.MaxValue)
-        tombstonesList = tombstonesList :+ Tombstones.Tombstone(
+        val tomb = Tombstones.Tombstone(
           PromQlParser.selectorMatchers(boundSrc, sel), mint, maxt)
+        synchronized { state = state.copy(tombstones = state.tombstones :+ tomb) }
         """{"status":"success","data":null}"""
       })
     server.createContext("/api/v1/admin/tsdb/clean_tombstones",
       MetricsServer.jsonHandler { _ =>
-        if (tombstonesList.nonEmpty) {
-          cleanedDf = Some(src.df) // folds masked ingest in too…
-          tombstonesList = Nil
-          ingestedDf = None // …so drop it or it would union twice
+        synchronized {
+          // src folds the masked ingest in too, so the new state starts
+          // with no ingested rows or they would union twice
+          if (state.tombstones.nonEmpty)
+            state = MetricsServer.ServingState(cleaned = Some(src.df))
         }
         """{"status":"success","data":null}"""
       })
@@ -656,10 +688,24 @@ final class MetricsServer(observed: Observed, port: Int = 0,
 
   def boundPort: Int = server.getAddress.getPort
 
-  override def close(): Unit = { server.stop(0); pool.shutdownNow(): Unit }
+  /** Stops serving and drops the ingest state, so a closed server that
+    * is still referenced holds no ingested rows or folded plans. */
+  override def close(): Unit = {
+    server.stop(0); pool.shutdownNow(): Unit
+    synchronized { state = MetricsServer.ServingState() }
+  }
 }
 
 object MetricsServer {
+  /** What a serving read unions and masks: the plan clean_tombstones
+    * folded (if any), the tombstones recorded since, and every sample
+    * ingested since — in Catalyst form, converted once at its write —
+    * with the one in-memory relation over them. */
+  private final case class ServingState(
+      cleaned: Option[org.apache.spark.sql.DataFrame] = None,
+      tombstones: Seq[Tombstones.Tombstone] = Nil,
+      ingestedRows: Vector[org.apache.spark.sql.catalyst.InternalRow] = Vector.empty,
+      ingested: Option[org.apache.spark.sql.DataFrame] = None)
 
   /** An over-limit query result (→ HTTP 422, Prometheus's execution-error
     * class): the server refuses to materialize it rather than buffering an

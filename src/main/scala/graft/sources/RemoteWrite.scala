@@ -11,12 +11,12 @@ import org.apache.spark.sql.types._
   * remote store: `timeseries[] = {labels[] = {name, value},
   * samples[] = {value, timestamp(ms)}}`.
   *
-  * Encoding note: the upstream wire is snappy-compressed protobuf; this
-  * sandbox carries no protobuf/snappy deps (zero egress), so the engine
-  * ingests the JSON rendering of the SAME message shape — field names and
-  * nesting are the protobuf JSON mapping, so a real deployment swaps the
-  * `from_json` for a protobuf decode (Spark 4 ships `from_protobuf`)
-  * without touching anything downstream.
+  * Encoding note: the upstream wire is snappy-compressed protobuf, and
+  * [[parsePb]] (v1) / [[parseV2Pb]] (v2) decode those real bytes through
+  * [[graft.functions.ProtoWire]] ([[graft.functions.Snappy]] undoes the
+  * framing). [[parse]] reads the JSON rendering of the SAME message shape
+  * — field names and nesting are the protobuf JSON mapping — for
+  * hand-written bodies; all faces share one downstream explode.
   *
   * Zero-UDF discipline (same as [[Otlp]]): one `from_json` + two
   * `explode`s + pure column math, all map-side inside whole-stage
@@ -43,9 +43,12 @@ object RemoteWrite {
 
   /** Parse a frame holding one remote-write request document per row in
     * `jsonCol` into samples: `metric` (the `__name__` label), `labels`
-    * (the remaining label map), `ts` (timestamp), `value` (double). */
+    * (the remaining label map), `ts` (timestamp), `value` (double).
+    * FAILFAST: a document that does not parse fails the action (the HTTP
+    * receiver's 400) instead of silently yielding no rows. */
   def parse(df: DataFrame, jsonCol: String = "json"): DataFrame =
-    fromTimeseries(df.select(from_json(col(jsonCol), schema)
+    fromTimeseries(df.select(from_json(col(jsonCol), schema,
+        Map("mode" -> "FAILFAST"))
       .getField("timeseries").as("__tss")))
 
   /** The shared downstream half of both wire faces: explode an

@@ -662,8 +662,8 @@ class MetricsSpec extends AnyFunSuite {
           enc("""mem{user_id="3"}""") + "&time=2024-01-01T10:02:00Z")
         assert(c2 == 200 && b2.contains("\"2.5\""), b2)
         // a malformed body errors, doesn't wedge the server
-        val (ce, _) = post(srv.boundPort, "/api/v1/write", "{nope")
-        assert(ce == 400 || ce == 200)
+        val (ce, be) = post(srv.boundPort, "/api/v1/write", "{nope")
+        assert(ce == 400 && be.contains("bad_data"), be)
         val (c3, b3) = get(srv.boundPort, "/api/v1/query?query=" +
           enc("sum(cpu)") + "&time=2024-01-01T10:02:00Z")
         assert(c3 == 200 && b3.contains("\"12.0\""), b3)
@@ -810,6 +810,104 @@ class MetricsSpec extends AnyFunSuite {
           l.name == "__name__" && l.value == "cpu")))
       } finally srv.close()
     }
+  }
+
+  test("remote writes decode when they arrive: bad or oversized bodies ingest nothing") {
+    import graft.functions.{ProtoWire, Snappy}
+    val df = Seq(
+      (1L, java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), 1L, "cpu", 7.0))
+      .toDF("event_id", "ts", "user_id", "event_type", "value")
+    val src = PromQlParser.PromSource(df, "event_type",
+      Seq("user_id", "event_type"), "ts", "event_id", "value")
+    def enc(s: String) = java.net.URLEncoder.encode(s, "UTF-8")
+    def pb(metric: String, user: String, values: Double*): Array[Byte] =
+      ProtoWire.encode(Seq(ProtoWire.Series(
+        Seq(ProtoWire.Label("__name__", metric), ProtoWire.Label("user_id", user)),
+        values.zipWithIndex.map { case (v, i) =>
+          ProtoWire.Sample(v, 1704103260000L + i * 1000L) })))
+    def write(port: Int, body: Array[Byte]): (Int, String) = {
+      val url = new java.net.URI(s"http://127.0.0.1:$port/api/v1/write").toURL
+      val conn = url.openConnection().asInstanceOf[java.net.HttpURLConnection]
+      conn.setRequestMethod("POST"); conn.setDoOutput(true)
+      conn.setRequestProperty("Content-Encoding", "snappy")
+      conn.setRequestProperty("Content-Type", "application/x-protobuf")
+      val os = conn.getOutputStream
+      try os.write(Snappy.compress(body)) finally os.close()
+      val code = conn.getResponseCode
+      val in = if (code == 200) conn.getInputStream else conn.getErrorStream
+      (code, scala.io.Source.fromInputStream(in).mkString)
+    }
+    def get(port: Int, pathAndQuery: String): (Int, String) = {
+      val url = new java.net.URI(s"http://127.0.0.1:$port$pathAndQuery").toURL
+      val conn = url.openConnection().asInstanceOf[java.net.HttpURLConnection]
+      val code = conn.getResponseCode
+      val in = if (code == 200) conn.getInputStream else conn.getErrorStream
+      (code, scala.io.Source.fromInputStream(in).mkString)
+    }
+    def sumCpu(port: Int): String = {
+      val (c, b) = get(port, "/api/v1/query?query=" + enc("sum(cpu)") +
+        "&time=2024-01-01T10:02:00Z")
+      assert(c == 200, b); b
+    }
+    Observed.use(spark) { obs =>
+      val srv = new MetricsServer(obs, promSource = Some(src))
+      try {
+        val (c1, b1) = write(srv.boundPort, pb("cpu", "2", 5.0))
+        assert(c1 == 200 && b1.contains("success"), b1)
+        assert(sumCpu(srv.boundPort).contains("\"12.0\""))
+        // valid snappy around a truncated protobuf: refused at the write,
+        // and every later read still answers from the good data
+        val (c2, b2) = write(srv.boundPort, pb("cpu", "3", 1.0).dropRight(3))
+        assert(c2 == 400 && b2.contains("bad_data"), b2)
+        assert(sumCpu(srv.boundPort).contains("\"12.0\""))
+        val (cs, bs) = get(srv.boundPort, "/api/v1/series?match[]=cpu")
+        assert(cs == 200 && bs.contains("\"user_id\":\"2\"") &&
+          !bs.contains("\"user_id\":\"3\""), bs)
+        // delete_series → clean_tombstones folds the ingested rows into
+        // the stored plan; a later write must not count them twice
+        val (cm, _) = write(srv.boundPort, pb("mem", "4", 2.5))
+        assert(cm == 200)
+        assert(get(srv.boundPort, "/api/v1/admin/tsdb/delete_series?match[]=" +
+          enc("""mem{user_id="4"}"""))._1 == 200)
+        assert(get(srv.boundPort, "/api/v1/admin/tsdb/clean_tombstones")._1 == 200)
+        val (c3, _) = write(srv.boundPort, pb("cpu", "5", 1.0))
+        assert(c3 == 200)
+        assert(sumCpu(srv.boundPort).contains("\"13.0\"")) // 7 + 5 + 1, once each
+        val (cg, bg) = get(srv.boundPort, "/api/v1/query?query=mem&time=2024-01-01T10:02:00Z")
+        assert(cg == 200 && bg.contains("\"result\":[]"), bg)
+      } finally srv.close()
+      // the decode collect rides the result cap: an over-cap write is
+      // refused whole, a write at the cap is taken
+      val capped = new MetricsServer(obs, promSource = Some(src), maxResultRows = 2)
+      try {
+        val (co, bo) = write(capped.boundPort, pb("cpu", "2", 1.0, 2.0, 3.0))
+        assert(co == 400 && bo.contains("\"status\":\"error\"") &&
+          bo.contains("more than 2 samples"), bo)
+        assert(sumCpu(capped.boundPort).contains("\"7.0\""))
+        val (ca, ba) = write(capped.boundPort, pb("cpu", "2", 1.0, 2.0))
+        assert(ca == 200 && ba.contains("success"), ba)
+        assert(sumCpu(capped.boundPort).contains("\"9.0\"")) // 7 + newest 2
+      } finally capped.close()
+    }
+  }
+
+  test("LocalRows: rows convert once and a grown frame shares them") {
+    import org.apache.spark.sql.graft.LocalRows
+    val df = Seq((1L, "cpu", 7.0), (2L, null, 1.5)).toDF("id", "name", "v")
+    val schema = org.apache.spark.sql.types.StructType(
+      df.schema.map(_.copy(nullable = true)))
+    val first = LocalRows.toInternal(schema, df.collect().toSeq)
+    val grown = first ++ LocalRows.toInternal(schema,
+      Seq(org.apache.spark.sql.Row(3L, "mem", 2.5)))
+    val f = LocalRows.frame(spark, schema, grown)
+    assert(f.schema == schema)
+    assert(f.orderBy("id").collect().map(_.toSeq).toSeq == Seq(
+      Seq(1L, "cpu", 7.0), Seq(2L, null, 1.5), Seq(3L, "mem", 2.5)))
+    // the leaf holds the accumulated rows themselves, not a copy
+    val leaf = f.queryExecution.analyzed.collectFirst {
+      case r: org.apache.spark.sql.catalyst.plans.logical.LocalRelation => r }.get
+    assert(leaf.data.zip(grown).forall { case (a, b) => a eq b })
+    assert(f.filter(col("v") > 2).count() == 2)
   }
 
   test("remote-read STREAMED_XOR_CHUNKS: negotiated, real decodable chunk bytes") {
